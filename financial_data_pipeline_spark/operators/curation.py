@@ -492,7 +492,7 @@ def prototypicality_rank(
 
     cent = ivf_build_centroids(df, vec_col, label_col)
     joined = df.join(F.broadcast(cent), label_col)
-    dist = 1.0 - cosine(F.col(vec_col), F.col("centroid"))
+    dist = 1.0 - cosine(f"`{vec_col}`", "centroid")
     w = Window.partitionBy(label_col).orderBy(
         F.desc("proto_dist"), F.asc(id_col)
     )

@@ -186,14 +186,6 @@ def exact_dedup(
     return keep
 
 
-def exact_dedup_filter(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Return df minus exact duplicates (keeps lowest id per hash)."""
-    keep = exact_dedup(df, text_col, id_col).select(id_col)
-    return df.join(keep, on=id_col, how="left_semi")
-
-
 def exact_dedup_keep_n(
     df: DataFrame,
     keep_n: int,
@@ -203,7 +195,8 @@ def exact_dedup_keep_n(
     """Frequency-capped dedup: keep at most ``keep_n`` copies per exact
     content hash (lowest ids win) — the CommonCrawl-style URL/content
     policy where limited duplication is a signal worth keeping but
-    unbounded boilerplate is not. ``keep_n=1`` ≡ ``exact_dedup_filter``.
+    unbounded boilerplate is not. ``keep_n=1`` keeps the lowest id per
+    hash, the same survivors as :func:`exact_dedup`.
 
     One shuffle on the 8-byte content hash; the rank window runs inside
     each (small) hash group, so no global sort and no skew beyond what
@@ -356,34 +349,93 @@ def minhash_signatures(
     )
 
 
-def capped_buckets(
-    buckets: DataFrame,
-    max_bucket_size: int,
+def _id_pair(x: Column, y: Column) -> Column:
+    return F.struct(x.alias("id_a"), y.alias("id_b"))
+
+
+def _bucket_pairs(
+    rows: DataFrame,
+    keys: list[str],
+    item: Column,
+    pair=_id_pair,
+    max_bucket_size: int | None = None,
     observation=None,
 ) -> DataFrame:
-    """Enforce the hot-bucket cap on a blocked frame with an ``xs``
-    doc-array column: buckets holding more than ``max_bucket_size``
-    docs are DROPPED before pair expansion (a bucket of B docs expands
-    to B²/2 pairs *inside one row* — a stopword shingle or degenerate
-    LSH band at 100 TB is otherwise a guaranteed executor OOM).
+    """Candidate pairs of a blocked frame: ONE groupBy per bucket
+    ``keys`` collecting ``item`` into a sorted array ``xs``, then
+    in-array pair expansion — positional i<j over the sorted array, so
+    a struct ``item`` whose first field is the id yields id_a < id_b.
+    Returns the fields of ``pair(x, y)`` (a struct per pair), one row
+    per (bucket, pair) occurrence; callers dedupe or count.
 
-    ``observation`` (a ``pyspark.sql.Observation``) surfaces the drop:
-    metrics ``dropped_buckets`` / ``max_bucket_docs`` become available
-    after the first action on the result — callers log them rather
-    than silently truncating. (Caveat: if the action's final result is
-    completely empty, AQE's empty-relation propagation can skip the
-    observed stage and the metrics never materialize — read them only
-    after an action that produced work.)
+    Versus an a/b self-join on the bucket key, the upstream subtree
+    (signatures, fingerprints, shingle hashes) executes once and only
+    the items shuffle.
+
+    ``max_bucket_size`` is the hot-bucket cap: buckets holding more
+    than that many items are DROPPED before expansion (a bucket of B
+    items expands to B²/2 pairs *inside one row* — a stopword shingle
+    or degenerate LSH band at 100 TB is otherwise a guaranteed
+    executor OOM). None leaves the expansion uncapped, for blocking
+    schemes whose recall contract forbids a drop.
+
+    ``observation`` (a ``pyspark.sql.Observation``, capped path only)
+    surfaces the drop: metrics ``dropped_buckets`` / ``max_bucket_docs``
+    become available after the first action on the result — callers
+    log them rather than silently truncating. (Caveat: if the action's
+    final result is completely empty, AQE's empty-relation propagation
+    can skip the observed stage and the metrics never materialize —
+    read them only after an action that produced work.)
     """
-    if observation is not None:
-        buckets = buckets.observe(
-            observation,
-            F.sum(
-                (F.size("xs") > max_bucket_size).cast("long")
-            ).alias("dropped_buckets"),
-            F.max(F.size("xs")).alias("max_bucket_docs"),
+    buckets = (
+        rows.groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(item)).alias("xs"))
+        .filter(F.size("xs") > 1)
+    )
+    if max_bucket_size is not None:
+        if observation is not None:
+            buckets = buckets.observe(
+                observation,
+                F.sum(
+                    (F.size("xs") > max_bucket_size).cast("long")
+                ).alias("dropped_buckets"),
+                F.max(F.size("xs")).alias("max_bucket_docs"),
+            )
+        buckets = buckets.filter(F.size("xs") <= max_bucket_size)
+    xs = F.col("xs")
+    pair_arr = F.flatten(
+        F.transform(
+            xs,
+            lambda x, i: F.transform(
+                F.slice(xs, i + 2, F.size(xs)), lambda y: pair(x, y)
+            ),
         )
-    return buckets.filter(F.size("xs") <= max_bucket_size)
+    )
+    return buckets.select(F.explode(pair_arr).alias("p")).select("p.*")
+
+
+def _band_rows(
+    sigs: DataFrame, id_col: str, num_perm: int, bands: int
+) -> DataFrame:
+    """(id, band, bucket) rows of MinHash signatures: bucket = xxhash64
+    of the band's ``num_perm // bands`` signature slots."""
+    rows = num_perm // bands
+    return sigs.select(
+        id_col,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.xxhash64(
+                            *[F.col(f"mh_{b * rows + r}") for r in range(rows)]
+                        ).alias("bucket"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("bb"),
+    ).select(id_col, "bb.band", "bb.bucket")
 
 
 def lsh_candidates(
@@ -405,62 +457,76 @@ def lsh_candidates(
     bucket — shuffle size O(n · bands), never O(n²).
 
     Buckets larger than ``max_bucket_size`` are dropped (see
-    ``capped_buckets``); for candidate GENERATION this is a recall
+    ``_bucket_pairs``); for candidate GENERATION this is a recall
     trade only — a band bucket shared by thousands of docs is
     signature-degenerate and its pairs would be rejected by the
     verifier anyway.
     """
-    rows = num_perm // bands
     sigs = minhash_signatures(
         df, text_col, id_col, num_perm, k, shingle_hash, shingle_rows_df
     )
-    band_rows = sigs.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col(f"mh_{b * rows + r}") for r in range(rows)]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
-    # Candidate pairs via one groupBy per (band, bucket) + in-array pair
-    # expansion (sorted ids, positional i<j) — the signature pass runs
-    # once and only ids shuffle, vs twice + a self-join. Bucket key is
-    # xxhash64 of the band's signature slice (8 bytes), not a string
-    # concat. Hot buckets (B²/2 pairs in one row) are capped below.
-    buckets = (
-        band_rows.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list(F.col(id_col))).alias("xs"))
-        .filter(F.size("xs") > 1)
-    )
-    buckets = capped_buckets(buckets, max_bucket_size, observation)
-    xs = F.col("xs")
-    pair_arr = F.flatten(
-        F.transform(
-            xs,
-            lambda x, i: F.transform(
-                F.slice(xs, i + 2, F.size(xs)),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
-    return (
-        buckets.select(F.explode(pair_arr).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
+    return _bucket_pairs(
+        _band_rows(sigs, id_col, num_perm, bands),
+        ["band", "bucket"],
+        F.col(id_col),
+        max_bucket_size=max_bucket_size,
+        observation=observation,
+    ).distinct()
 
 
 # ---------------------------------------------------------------------------
 # n-gram Jaccard (exact verifier / small-corpus path)
 # ---------------------------------------------------------------------------
+
+
+def _shingle_overlaps(
+    sh: DataFrame,
+    id_col: str,
+    max_bucket_size: int,
+    observation,
+    min_size_ratio: float | None = None,
+) -> DataFrame:
+    """(id_a, id_b, inter, sz_a, sz_b) for every doc pair sharing a
+    shingle: ``inter`` = |A∩B| counted over the shared shingle-hash
+    buckets of ``sh`` (id, sz, shh) rows, hot buckets capped.
+
+    Per-doc set sizes ride along on every shingle row (see
+    ``_sized_hashed_shingle_rows``), so ONE groupBy computes the
+    intersection AND both sizes — no sizes join.
+
+    ``min_size_ratio``: the set-similarity-join "length filter" (guide
+    §2.3 — shuffle fewer bytes). Jaccard is maximal when the smaller
+    shingle set is fully inside the larger, so
+    J = i/(sz_a+sz_b-i) ≤ min(sz)/max(sz) for every possible
+    intersection i. round(·,6) is monotone, so a pair whose rounded
+    bound is below the jaccard threshold can never pass the final
+    filter — its occurrence rows are dropped BEFORE the intersection
+    exchange instead of after the aggregate. Output pairs are identical
+    by the bound; only shuffle rows shrink.
+    """
+    occ = _bucket_pairs(
+        sh,
+        ["shh"],
+        F.struct(F.col(id_col).alias("id"), F.col("sz")),
+        lambda x, y: F.struct(
+            x["id"].alias("id_a"),
+            y["id"].alias("id_b"),
+            x["sz"].alias("sz_a"),
+            y["sz"].alias("sz_b"),
+        ),
+        max_bucket_size,
+        observation,
+    )
+    if min_size_ratio is not None:
+        occ = occ.filter(
+            F.round(F.least("sz_a", "sz_b") / F.greatest("sz_a", "sz_b"), 6)
+            >= F.lit(min_size_ratio)
+        )
+    return occ.groupBy("id_a", "id_b").agg(
+        F.count(F.lit(1)).alias("inter"),
+        F.first("sz_a").alias("sz_a"),
+        F.first("sz_b").alias("sz_b"),
+    )
 
 
 def jaccard_pairs(
@@ -484,19 +550,16 @@ def jaccard_pairs(
     ≥1 shingle ever meet. With ``candidates`` (e.g. from LSH): verifies
     only those pairs. Output: id_a, id_b, jaccard (rounded 6).
 
-    Pair generation is ONE groupBy per shingle bucket + in-array pair
-    expansion (docs sorted by id inside the bucket, positional i<j →
-    id_a < id_b), not an a/b self-join: the shingle pass runs once and
-    only (id, sz) structs shuffle — measured ~30% faster than the
-    ReuseExchange'd self-join at sf0.1, with one corpus pass instead of
-    two. Per-doc set sizes ride along on every shingle row (see
-    ``_sized_hashed_shingle_rows``), so the pair aggregation computes
-    intersection AND both sizes in one groupBy — no sizes join.
+    Pairs and intersections come from :func:`_shingle_overlaps`: one
+    groupBy per shingle bucket + in-array pair expansion, not an a/b
+    self-join — only (id, sz) structs shuffle, measured ~30% faster
+    than the ReuseExchange'd self-join at sf0.1, with one corpus pass
+    instead of two.
 
     Hot-bucket cap (the 100 TB guard): a shingle shared by B docs
     expands to B²/2 structs in ONE row, so shingle buckets larger than
     ``max_bucket_size`` are dropped before expansion (see
-    ``capped_buckets``; ``observation`` surfaces the dropped count).
+    ``_bucket_pairs``; ``observation`` surfaces the dropped count).
     Dropping a stopword shingle slightly UNDERestimates Jaccard for
     pairs that shared it (their intersection loses one near-universal,
     zero-signal shingle) — the standard trade. The default cap (1000)
@@ -546,57 +609,8 @@ def jaccard_pairs(
         )
     else:
         sh = _sized_hashed_shingle_rows(df, text_col, id_col, k)
-    buckets = (
-        sh.groupBy("shh")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col(id_col).alias("id"), F.col("sz")))
-            ).alias("xs")
-        )
-        .filter(F.size("xs") > 1)
-    )
-    buckets = capped_buckets(buckets, max_bucket_size, observation)
-    xs = F.col("xs")
-    pair_arr = F.flatten(
-        F.transform(
-            xs,
-            lambda x, i: F.transform(
-                F.slice(xs, i + 2, F.size(xs)),
-                lambda y: F.struct(
-                    x["id"].alias("id_a"),
-                    y["id"].alias("id_b"),
-                    x["sz"].alias("sz_a"),
-                    y["sz"].alias("sz_b"),
-                ),
-            ),
-        )
-    )
-    inter = (
-        buckets.select(F.explode(pair_arr).alias("p"))
-        .select("p.*")
-        # Size-ratio prune (the set-similarity-join "length filter";
-        # guide §2.3 — shuffle fewer bytes): jaccard is maximal when
-        # the smaller shingle set is fully inside the larger, so
-        # J = i/(sz_a+sz_b-i) ≤ min(sz)/max(sz) for every possible
-        # intersection i. round(·,6) is monotone, so a pair whose
-        # rounded bound is below the threshold can never pass the
-        # final filter — its occurrence rows are dropped BEFORE the
-        # intersection exchange instead of after the aggregate.
-        # Output pairs are identical by the bound; only shuffle rows
-        # shrink. (containment_pairs cannot use this: containment's
-        # upper bound is always 1.0.)
-        .filter(
-            F.round(
-                F.least("sz_a", "sz_b") / F.greatest("sz_a", "sz_b"), 6
-            )
-            >= F.lit(threshold)
-        )
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.count(F.lit(1)).alias("inter"),
-            F.first("sz_a").alias("sz_a"),
-            F.first("sz_b").alias("sz_b"),
-        )
+    inter = _shingle_overlaps(
+        sh, id_col, max_bucket_size, observation, min_size_ratio=threshold
     )
     if candidates is not None:
         inter = inter.join(candidates, on=["id_a", "id_b"], how="left_semi")
@@ -763,40 +777,23 @@ def simhash_pairs(
             )
         ).alias("c"),
     ).select(id_col, "fp", "c.chunk_id", "c.chunk")
-    # Pair generation as ONE groupBy on the chunk bucket + in-array pair
-    # expansion: a plain a/b self-join would re-run the entire
-    # tokenize→hash→60-bit-fold pipeline on BOTH sides (measured ~2× the
-    # query cost); here the fingerprint subtree executes once and only
-    # (id, fp) pairs shuffle. Docs are sorted by id inside the bucket so
-    # positional i<j gives id_a < id_b. Note for 100 TB: a degenerate
-    # bucket with B docs yields B² pairs in one row — cap or salt hot
-    # buckets if the corpus has giant identical-chunk cohorts.
-    buckets = (
-        chunks.groupBy("chunk_id", "chunk")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col(id_col).alias("id"), F.col("fp")))
-            ).alias("xs")
-        )
-        .filter(F.size("xs") > 1)
-    )
-    xs = F.col("xs")
-    pair_arr = F.flatten(
-        F.transform(
-            xs,
-            lambda x, i: F.transform(
-                F.slice(xs, i + 2, F.size(xs)),
-                lambda y: F.struct(
-                    x["id"].alias("id_a"),
-                    y["id"].alias("id_b"),
-                    F.bit_count(x["fp"].bitwiseXOR(y["fp"])).alias("hamming"),
-                ),
+    # A plain a/b self-join would re-run the entire tokenize→hash→
+    # 60-bit-fold pipeline on BOTH sides (measured ~2× the query cost).
+    # UNCAPPED: the pigeonhole blocking is lossless, and dropping a hot
+    # chunk bucket would lose pairs. Note for 100 TB: a degenerate bucket
+    # with B docs yields B² pairs in one row — salt hot buckets if the
+    # corpus has giant identical-chunk cohorts.
+    return (
+        _bucket_pairs(
+            chunks,
+            ["chunk_id", "chunk"],
+            F.struct(F.col(id_col).alias("id"), F.col("fp")),
+            lambda x, y: F.struct(
+                x["id"].alias("id_a"),
+                y["id"].alias("id_b"),
+                F.bit_count(x["fp"].bitwiseXOR(y["fp"])).alias("hamming"),
             ),
         )
-    )
-    return (
-        buckets.select(F.explode(pair_arr).alias("p"))
-        .select("p.id_a", "p.id_b", "p.hamming")
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
@@ -973,47 +970,15 @@ def containment_pairs(
     near-dup metric that catches quotes, excerpts and supersets whose
     Jaccard stays low because the LENGTHS differ (a 10-shingle doc
     fully inside a 500-shingle doc has Jaccard ≈ 0.02 but containment
-    1.0). Same single-pass inverted-index pair expansion as
-    :func:`jaccard_pairs` (shingle rows carry both set sizes, hot
-    buckets capped); only the final ratio differs, so the two metrics
-    share every scale property."""
-    sh = _sized_hashed_shingle_rows(df, text_col, id_col, k)
-    buckets = (
-        sh.groupBy("shh")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col(id_col).alias("id"), F.col("sz"))
-                )
-            ).alias("xs")
-        )
-        .filter(F.size("xs") > 1)
-    )
-    buckets = capped_buckets(buckets, max_bucket_size, None)
-    xs = F.col("xs")
-    pair_arr = F.flatten(
-        F.transform(
-            xs,
-            lambda x, i: F.transform(
-                F.slice(xs, i + 2, F.size(xs)),
-                lambda y: F.struct(
-                    x["id"].alias("id_a"),
-                    y["id"].alias("id_b"),
-                    x["sz"].alias("sz_a"),
-                    y["sz"].alias("sz_b"),
-                ),
-            ),
-        )
-    )
-    inter = (
-        buckets.select(F.explode(pair_arr).alias("p"))
-        .select("p.*")
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.count(F.lit(1)).alias("inter"),
-            F.first("sz_a").alias("sz_a"),
-            F.first("sz_b").alias("sz_b"),
-        )
+    1.0). Same :func:`_shingle_overlaps` intersection count as
+    :func:`jaccard_pairs` (hot buckets capped); only the final ratio
+    differs, so the two metrics share every scale property."""
+    # no size-ratio prune: containment's upper bound is always 1.0
+    inter = _shingle_overlaps(
+        _sized_hashed_shingle_rows(df, text_col, id_col, k),
+        id_col,
+        max_bucket_size,
+        None,
     )
     return (
         inter.withColumn(

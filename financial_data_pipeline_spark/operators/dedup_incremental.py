@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from financial_data_pipeline_spark.operators.dedup import (
+    _band_rows,
+    _bucket_pairs,
     _sized_hashed_shingle_rows,
     jaccard_pairs,
     minhash_signatures,
@@ -52,24 +54,8 @@ def banded_rows(
     """(id, band, bucket) rows — the same banding as
     ``dedup.lsh_candidates`` (xxhash64 of each band's signature slice),
     factored out so the index writer and the prober share it."""
-    rows = num_perm // bands
     sigs = minhash_signatures(df, text_col, id_col, num_perm, k)
-    return sigs.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col(f"mh_{b * rows + r}") for r in range(rows)]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
+    return _band_rows(sigs, id_col, num_perm, bands)
 
 
 def _index_paths(index_dir: str) -> tuple[str, str]:
@@ -133,32 +119,12 @@ def dedup_against_index(
     else:
         cross = None
 
-    # within-batch candidates: reuse the capped bucket expansion from
-    # lsh_candidates (its hot-bucket guard applies; a self-join here
-    # would be unguarded B² on a degenerate band bucket)
-    from financial_data_pipeline_spark.operators.dedup import capped_buckets
-
-    buckets = (
-        new_bands.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list(F.col(id_col))).alias("xs"))
-        .filter(F.size("xs") > 1)
-    )
-    buckets = capped_buckets(buckets, max_bucket_size=1000)
-    xs = F.col("xs")
-    pair_arr = F.flatten(
-        F.transform(
-            xs,
-            lambda x, i: F.transform(
-                F.slice(xs, i + 2, F.size(xs)),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
-    within = (
-        buckets.select(F.explode(pair_arr).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
+    # within-batch candidates: the capped bucket expansion of
+    # lsh_candidates (a self-join here would be unguarded B² on a
+    # degenerate band bucket)
+    within = _bucket_pairs(
+        new_bands, ["band", "bucket"], F.col(id_col), max_bucket_size=1000
+    ).distinct()
     candidates = within if cross is None else within.unionByName(cross).distinct()
 
     # verify over new ∪ (matched historical) shingle rows — history is

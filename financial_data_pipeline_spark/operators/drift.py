@@ -93,15 +93,19 @@ def _hist_compact(
         mnew.withColumn("__side", F.lit(1))
     )
     width = (F.col("__hi") - F.col("__lo")) / F.lit(bins)
+    # clamp to [0, bins-1] in DOUBLE before the int cast: a new value
+    # far outside a narrow reference range puts (v-lo)/width past 2^31,
+    # and the non-ANSI cast wraps instead of saturating (e.g.
+    # cast(floor(1e11D) as int) = 1215752192) — a wrong bin. A zero
+    # width divides to NULL, which greatest() skips → bin 0.
     bucket = F.when(
         F.col("__v").isNotNull(),
-        F.least(
-            F.lit(bins - 1),
-            F.greatest(
-                F.lit(0),
-                F.floor((F.col("__v") - F.col("__lo")) / width).cast("int"),
-            ),
-        ),
+        F.floor(
+            F.least(
+                F.lit(bins - 1.0),
+                F.greatest(F.lit(0.0), (F.col("__v") - F.col("__lo")) / width),
+            )
+        ).cast("int"),
     )
     binned = (
         u.join(F.broadcast(stats), "feature")

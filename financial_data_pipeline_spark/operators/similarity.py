@@ -17,15 +17,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-# Vector primitives are built as ONE SQL-text expression each (r10,
-# guide §7.3 applied to construction): the Column-API forms cost ~25
-# (dot) to ~100 (cosine) py4j round trips PER CALL — at this box's
-# ~0.6 ms round-trip latency that chatter dominated the ANN family's
-# bench floor. The text parses to the identical expressions (pinned by
-# tests/test_expr_text_semantics.py via sameSemantics against the
-# Column-API forms, which live on verbatim in that test).
-
-
 def _dot_sql(a: str, b: str) -> str:
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
@@ -33,28 +24,19 @@ def _dot_sql(a: str, b: str) -> str:
     )
 
 
-def _dot_api(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def dot(a: str, b: str) -> Column:
+    """Dot product of two array expressions given as SQL text (a column
+    name, backquoted when needed, or a ``_vec_sql`` literal). One
+    ``F.expr`` per primitive: building the same tree through the
+    Column API cost ~25 py4j round trips per call (r10)."""
+    return F.expr(_dot_sql(a, b))
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_sql(a, b))
-    return _dot_api(a if not isinstance(a, str) else F.expr(a),
-                    b if not isinstance(b, str) else F.expr(b))
+def norm(a: str) -> Column:
+    return F.expr(f"sqrt({_dot_sql(a, a)})")
 
 
-def norm(a: Column | str) -> Column:
-    if isinstance(a, str):
-        return F.expr(f"sqrt({_dot_sql(a, a)})")
-    return F.sqrt(_dot_api(a, a))
-
-
-def cosine(a: Column | str, b: Column | str) -> Column:
+def cosine(a: str, b: str) -> Column:
     """Cosine similarity with the zero-vector convention pinned: a
     zero-norm side yields 0.0 (treated as orthogonal), NOT 0/0 = NaN —
     NaN ordering is engine-specific in rank windows, so an all-zero
@@ -62,16 +44,12 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     (fuzzed-table finding). DuckDB twin:
     ``coalesce(list_dot_product(a,b) / nullif(sqrt(list_dot_product(a,a))
     * sqrt(list_dot_product(b,b)), 0), 0)``."""
-    # nullif/coalesce, not when/otherwise: higher-order aggregate folds
-    # get no common-subexpression elimination, so a WHEN guard would
+    # nullif/coalesce, not CASE WHEN: higher-order aggregate folds get
+    # no common-subexpression elimination, so a WHEN guard would
     # evaluate the two norm folds twice per row
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(
-            f"coalesce({_dot_sql(a, b)} / nullif(sqrt({_dot_sql(a, a)}) * "
-            f"sqrt({_dot_sql(b, b)}), 0.0D), 0.0D)"
-        )
-    return F.coalesce(
-        dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0)), F.lit(0.0)
+    return F.expr(
+        f"coalesce({_dot_sql(a, b)} / nullif(sqrt({_dot_sql(a, a)}) * "
+        f"sqrt({_dot_sql(b, b)}), 0.0D), 0.0D)"
     )
 
 
@@ -157,6 +135,76 @@ def ivf_topk(
     )
 
 
+def _matrix(series) -> "np.ndarray":
+    """(n, dim) float64 matrix from a pandas Series of vectors."""
+    import numpy as np
+
+    return np.array(
+        [np.asarray(v, dtype=np.float64) for v in series]
+    ).reshape(len(series), -1)
+
+
+def _unit_matrix(series) -> "np.ndarray":
+    """Row-normalized :func:`_matrix`. Zero vectors normalize to NaN
+    rows, which then fail every >= threshold / top-k comparison and
+    exclude themselves — consistent with the cosine() zero-norm
+    convention. errstate keeps the expected 0/0 from logging a warning
+    per batch."""
+    import numpy as np
+
+    m = _matrix(series)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        m /= np.linalg.norm(m, axis=1, keepdims=True)
+    return m
+
+
+def _broadcast_side(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    cap: int,
+    overflow: str,
+    unit: bool,
+    extras: "list[tuple[str, str]]" = (),
+):
+    """Collect the small side of a pair join and broadcast it as
+    ``(ids, matrix, {alias: values})`` — one bounded driver action:
+    ``cap + 1`` rows are fetched, and more than ``cap`` raise
+    ``ValueError(overflow)`` instead of silently OOMing the driver.
+    ``unit`` row-normalizes the matrix (cosine); ``extras`` lists
+    (column, alias) pairs carried along as arrays."""
+    pdf = (
+        df.select(id_col, vec_col, *[c for c, _ in extras])
+        .limit(cap + 1)
+        .toPandas()
+    )
+    if len(pdf) > cap:
+        raise ValueError(overflow)
+    mat = _unit_matrix(pdf[vec_col]) if unit else _matrix(pdf[vec_col])
+    side = (
+        pdf[id_col].to_numpy(),
+        mat,
+        {al: pdf[c].to_numpy() for c, al in extras},
+    )
+    return df.sparkSession.sparkContext.broadcast(side)
+
+
+def _topk_per_query(
+    df: DataFrame, k: int, score: str = "cos_sim", id_: str = "neighbor_id"
+) -> DataFrame:
+    """The ≤ ``k`` rows per ``query_id`` ranked by (``score`` desc,
+    ``id_`` asc) — the deterministic tie-break every top-k join
+    shares."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc(id_))
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .drop("__rn")
+    )
+
+
 def _pair_schema():
     from pyspark.sql import types as T
 
@@ -201,37 +249,24 @@ def cosine_pairs(
     import numpy as np
     import pandas as pd
 
-    def to_unit_matrix(series) -> "np.ndarray":
-        m = np.array([np.asarray(v, dtype=np.float64) for v in series])
-        # zero vectors normalize to NaN rows, which then fail every
-        # >= threshold / top-k comparison and exclude themselves —
-        # consistent with the cosine() zero-norm convention. errstate
-        # keeps the expected 0/0 from logging a warning per batch.
-        with np.errstate(invalid="ignore", divide="ignore"):
-            m /= np.linalg.norm(m, axis=1, keepdims=True)
-        return m
+    def emit(a_ids, a_mat, b_ids, b_mat) -> pd.DataFrame:
+        sims = a_mat @ b_mat.T
+        mask = (sims >= threshold) & (a_ids[:, None] < b_ids[None, :])
+        ai, bj = np.nonzero(mask)
+        return pd.DataFrame(
+            {
+                "id_a": a_ids[ai],
+                "id_b": b_ids[bj],
+                "cos_sim": np.round(sims[ai, bj], 6),
+            }
+        )
 
     if block_col is not None:
 
         def block_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) < 2:
-                return pd.DataFrame(
-                    {"id_a": pd.Series(dtype="int64"),
-                     "id_b": pd.Series(dtype="int64"),
-                     "cos_sim": pd.Series(dtype="float64")}
-                )
             ids = pdf[id_col].to_numpy()
-            mat = to_unit_matrix(pdf[vec_col])
-            sims = mat @ mat.T
-            mask = (sims >= threshold) & (ids[:, None] < ids[None, :])
-            ai, bj = np.nonzero(mask)
-            return pd.DataFrame(
-                {
-                    "id_a": ids[ai],
-                    "id_b": ids[bj],
-                    "cos_sim": np.round(sims[ai, bj], 6),
-                }
-            )
+            mat = _unit_matrix(pdf[vec_col])
+            return emit(ids, mat, ids, mat)
 
         return (
             df.select(id_col, vec_col, block_col)
@@ -239,33 +274,22 @@ def cosine_pairs(
             .applyInPandas(block_kernel, _pair_schema())
         )
 
-    side = df.select(id_col, vec_col).limit(max_side_rows + 1).toPandas()
-    if len(side) > max_side_rows:
-        raise ValueError(
-            f"cosine_pairs comparison side exceeds max_side_rows="
-            f"{max_side_rows}; supply block_col (e.g. an lsh_bucket "
-            f"column) for the blocked scale path"
-        )
-    ids_b = side[id_col].to_numpy()
-    mat = to_unit_matrix(side[vec_col])
-    sc = df.sparkSession.sparkContext
-    b_ids = sc.broadcast(ids_b)
-    b_mat = sc.broadcast(mat)
+    bc = _broadcast_side(
+        df,
+        id_col,
+        vec_col,
+        max_side_rows,
+        f"cosine_pairs comparison side exceeds max_side_rows="
+        f"{max_side_rows}; supply block_col (e.g. an lsh_bucket "
+        f"column) for the blocked scale path",
+        unit=True,
+    )
 
     def kernel(batches):
-        ids2, mat2 = b_ids.value, b_mat.value
+        ids_b, mat_b, _ = bc.value
         for pdf in batches:
-            a_ids = pdf[id_col].to_numpy()
-            a_mat = to_unit_matrix(pdf[vec_col])
-            sims = a_mat @ mat2.T
-            mask = (sims >= threshold) & (a_ids[:, None] < ids2[None, :])
-            ai, bj = np.nonzero(mask)
-            yield pd.DataFrame(
-                {
-                    "id_a": a_ids[ai],
-                    "id_b": ids2[bj],
-                    "cos_sim": np.round(sims[ai, bj], 6),
-                }
+            yield emit(
+                pdf[id_col].to_numpy(), _unit_matrix(pdf[vec_col]), ids_b, mat_b
             )
 
     return df.select(id_col, vec_col).mapInPandas(kernel, _pair_schema())
@@ -298,17 +322,15 @@ def knn_join(
     import pandas as pd
     from pyspark.sql import types as T
 
-    qside = queries.select(id_col, vec_col).limit(max_query_rows + 1).toPandas()
-    if len(qside) > max_query_rows:
-        raise ValueError(
-            f"knn_join query side exceeds max_query_rows={max_query_rows}; "
-            f"split the query set or use an ANN index (ivf_topk/lsh_ann_topk)"
-        )
-    q_ids = qside[id_col].to_numpy()
-    q_mat = np.array([np.asarray(v, dtype=np.float64) for v in qside[vec_col]])
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-    sc = corpus.sparkSession.sparkContext
-    b_qids, b_qmat = sc.broadcast(q_ids), sc.broadcast(q_mat)
+    bq = _broadcast_side(
+        queries,
+        id_col,
+        vec_col,
+        max_query_rows,
+        f"knn_join query side exceeds max_query_rows={max_query_rows}; "
+        f"split the query set or use an ANN index (ivf_topk/lsh_ann_topk)",
+        unit=True,
+    )
 
     schema = T.StructType(
         [
@@ -319,14 +341,11 @@ def knn_join(
     )
 
     def kernel(batches):
-        qids, qmat = b_qids.value, b_qmat.value
+        qids, qmat, _ = bq.value
         nq = len(qids)
         for pdf in batches:
             ids = pdf[id_col].to_numpy()
-            mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            with np.errstate(invalid="ignore", divide="ignore"):
-                # zero vectors -> NaN rows, self-excluding (see above)
-                mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+            mat = _unit_matrix(pdf[vec_col])
             sims = np.round(mat @ qmat.T, 6)  # (batch, nq), rank on rounded
             kk = min(k, len(ids))
             # per query: local top-k by (sim desc, id asc)
@@ -339,35 +358,18 @@ def knn_join(
             yield pd.DataFrame(rows)
 
     local = corpus.select(id_col, vec_col).mapInPandas(kernel, schema)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        local.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return _topk_per_query(local, k)
 
 
-def lsh_bucket(
-    vec: Column, planes: list[list[float]]
-) -> Column:
-    """Random-hyperplane LSH bucket id: bit i = sign(vec · plane_i).
+def lsh_bucket(vec: str, planes: list[list[float]]) -> Column:
+    """Random-hyperplane LSH bucket id: bit i = sign(vec · plane_i),
+    ``vec`` given as SQL text (see :func:`dot`).
 
     ``planes`` are fixed (seeded) hyperplanes supplied by the caller so
-    the bucketing is deterministic and oracle-reproducible.
+    the bucketing is deterministic and oracle-reproducible. One expr
+    for the whole bucket id:
+    0 + Σ_i CASE WHEN dot(vec, plane_i) >= 0 THEN 2^i ELSE 0 END.
     """
-    # One expr for the whole bucket id (r10 §7.3): the per-plane
-    # Column-API loop cost ~35 py4j round trips per plane. Same tree:
-    # 0 + Σ_i CASE WHEN dot(vec, plane_i) >= 0 THEN 2^i ELSE 0 END.
-    if not isinstance(vec, str):
-        bucket = F.lit(0)
-        for i, p in enumerate(planes):
-            pl = F.lit([float(x) for x in p])
-            bucket = bucket + F.when(dot(vec, pl) >= 0, F.lit(1 << i)).otherwise(0)
-        return bucket
     terms = " + ".join(
         f"(CASE WHEN {_dot_sql(vec, _vec_sql([float(x) for x in p]))} >= 0 "
         f"THEN {1 << i} ELSE 0 END)"
@@ -526,16 +528,7 @@ def lsh_topk_join(
         "neighbor_id",
         F.round(cosine("__cv", "__qv"), 6).alias("cos_sim"),
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return _topk_per_query(cand, k)
 
 
 def recall_at_k(
@@ -608,29 +601,23 @@ def ivf_topk_join(
     corpus embedding column never shuffles; candidates (~nprobe/cells
     of the corpus per query) shuffle for the final top-k window.
     """
-    from pyspark.sql import Window
-
     qside = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
     )
     cent = centroids.select(
         F.col(label_col).alias("__cl"), F.col("centroid").alias("__cv")
     )
-    wprobe = Window.partitionBy("query_id").orderBy(
-        F.desc("__cs"), F.asc("__cl")
-    )
-    probes = (
-        qside.crossJoin(F.broadcast(cent))
-        .select(
+    probes = _topk_per_query(
+        qside.crossJoin(F.broadcast(cent)).select(
             "query_id",
             "__qv",
             "__cl",
             cosine("__cv", "__qv").alias("__cs"),
-        )
-        .withColumn("__rn", F.row_number().over(wprobe))
-        .filter(F.col("__rn") <= nprobe)
-        .select("query_id", "__qv", "__cl")
-    )
+        ),
+        nprobe,
+        "__cs",
+        "__cl",
+    ).select("query_id", "__qv", "__cl")
     cand = corpus.join(
         F.broadcast(probes), F.col(label_col) == F.col("__cl")
     ).select(
@@ -638,14 +625,7 @@ def ivf_topk_join(
         F.col(id_col).alias("neighbor_id"),
         F.round(cosine(f"`{vec_col}`", "__qv"), 6).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return _topk_per_query(cand, k)
 
 
 def semantic_dedup(
@@ -779,8 +759,6 @@ def quantized_topk_join(
     3. rerank: candidates join back to the corpus by id (row lookups,
        not a scan) + exact cosine on the original floats.
     """
-    from pyspark.sql import Window
-
     lo, hi = embedding_minmax(corpus, vec_col, dim)
     codes = corpus.select(
         F.col(id_col), quantize_codes(F.col(vec_col), lo, hi).alias("code")
@@ -804,13 +782,8 @@ def quantized_topk_join(
             dot("dv", "qdv") / (F.col("dnorm") * F.col("qnorm")), 6
         ).alias("approx_sim"),
     )
-    wa = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim"), F.asc("neighbor_id")
-    )
-    cand = (
-        approx.withColumn("__rn", F.row_number().over(wa))
-        .filter(F.col("__rn") <= k * mult)
-        .select("query_id", "neighbor_id")
+    cand = _topk_per_query(approx, k * mult, "approx_sim").select(
+        "query_id", "neighbor_id"
     )
     qvec = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
@@ -827,14 +800,7 @@ def quantized_topk_join(
             F.round(cosine(f"`{vec_col}`", "qv"), 6).alias("cos_sim"),
         )
     )
-    we = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        rer.withColumn("__rn", F.row_number().over(we))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return _topk_per_query(rer, k)
 
 
 def kmeans_assign(
@@ -1114,16 +1080,6 @@ def mmr_diverse_topk(
     return SparkSession.getActiveSession().createDataFrame(out)
 
 
-def euclidean(a: Column, b: Column) -> Column:
-    """Euclidean distance between two equal-length double arrays as an
-    order-pinned fold: zip_with squared diffs, then a left-to-right
-    aggregate seeded with 0.0 — the identical summation order a DuckDB
-    ``list_reduce`` twin replays, so rounded distances hash across
-    engines."""
-    sq = F.zip_with(a, b, lambda x, y: (x - y) * (x - y))
-    return F.sqrt(F.aggregate(sq, F.lit(0.0), lambda s, x: s + x))
-
-
 # Default hot-block cap for the blocked all-pairs family. Σ_b n_b² with
 # n_b ≤ 4096 keeps every per-block pair frame under ~17M rows (seconds
 # of work per block on one core, safely in memory); an 80%-hot bucket
@@ -1333,7 +1289,7 @@ def _distance_pairs(
 
     # ------------------------------------------------------------------
     # Pair generation (r9 optimization, guide §4.2): the per-pair
-    # distance used to be the JVM ``euclidean`` zip_with+aggregate fold
+    # distance used to be a JVM zip_with+aggregate fold
     # evaluated on every row of an n² join — higher-order-function
     # expressions are interpreted per element, so the fold dominated
     # every all-pairs query (measured: lof_outliers 3.37 s at sf0.1,
@@ -1381,11 +1337,6 @@ def _distance_pairs(
             acc += diff * diff
         return np.sqrt(acc)
 
-    def to_matrix(series) -> "np.ndarray":
-        return np.array(
-            [np.asarray(v, dtype=np.float64) for v in series]
-        ).reshape(len(series), -1)
-
     def topk_keep(drow: "np.ndarray", valid: "np.ndarray") -> "np.ndarray":
         """Candidate mask for the downstream (round(d,8), j) top-k
         window. Raw-distance selection is safe with an absolute
@@ -1428,22 +1379,17 @@ def _distance_pairs(
         # exact all-pairs: ONE bounded driver collect replaces the old
         # count()-guard job AND serves as the broadcast comparison side
         # (the cosine_pairs contract: ≤ max_rows · dim doubles).
-        b_pdf = (
-            df.select(id_col, vec_col, *extra.keys())
-            .limit(max_rows + 1)
-            .toPandas()
+        bc = _broadcast_side(
+            df,
+            id_col,
+            vec_col,
+            max_rows,
+            f"{caller} is exact O(n^2); more than max_rows="
+            f"{max_rows} rows — pass block_col (LSH bucket / IVF "
+            "cell) for the blocked scale path",
+            unit=False,
+            extras=b_aliases,
         )
-        if len(b_pdf) > max_rows:
-            raise ValueError(
-                f"{caller} is exact O(n^2); more than max_rows="
-                f"{max_rows} rows — pass block_col (LSH bucket / IVF "
-                "cell) for the blocked scale path"
-            )
-        B_ids = b_pdf[id_col].to_numpy()
-        B_mat = to_matrix(b_pdf[vec_col])
-        B_extras = {al: b_pdf[c].to_numpy() for c, al in b_aliases}
-        sc = df.sparkSession.sparkContext
-        bc = sc.broadcast((B_ids, B_mat, B_extras))
 
         def kernel(batches):
             ids_b, mat_b, ext_b = bc.value
@@ -1452,7 +1398,7 @@ def _distance_pairs(
                 if pdf.empty:
                     continue
                 A_ids = pdf[id_col].to_numpy()
-                A_mat = to_matrix(pdf[vec_col])
+                A_mat = _matrix(pdf[vec_col])
                 A_extras = {al: pdf[c].to_numpy() for c, al in a_aliases}
                 for s in range(0, len(A_ids), ch):
                     e = s + ch
@@ -1486,7 +1432,7 @@ def _distance_pairs(
                     {f.name: pd.Series(dtype="object") for f in out_schema}
                 )
             ids = pdf[id_col].to_numpy()
-            mat = to_matrix(pdf[vec_col])
+            mat = _matrix(pdf[vec_col])
             extras = {al: pdf[c].to_numpy() for c, al in a_aliases} | {
                 al: pdf[c].to_numpy() for c, al in b_aliases
             }

@@ -119,11 +119,9 @@ def token_count_bpe(text: Column) -> Column:
     )
 
 
-# The language-marker expressions are built as SQL text when the text
-# column is given by NAME (one py4j round trip per language instead of
-# ~15 per marker word — r10, guide §7.3 applied to construction; pinned
-# sameSemantics-identical in tests/test_expr_text_semantics.py).
-# Column inputs keep the original Column-API path.
+# The language-marker expressions are built as SQL text over the text
+# column NAME (one py4j round trip per language instead of ~15 per
+# marker word — r10, guide §7.3 applied to construction).
 
 
 def _sql_str(s: str) -> str:
@@ -150,85 +148,45 @@ def _word_count_marker_sql(t: str, word: str) -> str:
     )
 
 
-def word_count_marker(text: Column | str, word: str) -> Column:
-    """Occurrences of ``word`` as a whitespace-delimited token."""
-    if isinstance(text, str):
-        return F.expr(_word_count_marker_sql(text, word))
-    # ASCII fold (see ws_tokens): full-unicode lower() makes the padded
-    # string and therefore marker counts engine-specific around U+0130
-    # NULL ≡ empty: without the coalesce, concat propagates NULL and a
-    # NULL doc scores NULL for every language instead of 0 → the
-    # struct-argmax picks an arbitrary language, not 'und' (NULL-text
-    # fuzz finding: lang_detect said 'de' for a NULL doc)
-    padded = F.concat(
-        F.lit(" "),
-        F.translate(
-            F.coalesce(text, F.lit("")),
-            "ABCDEFGHIJKLMNOPQRSTUVWXYZ",
-            "abcdefghijklmnopqrstuvwxyz",
-        ),
-        F.lit(" "),
-    )
-    needle = f" {word} "
-    # (len(s) - len(replace(s, needle, ''))) / len(needle) counts
-    # non-overlapping occurrences — portable to any SQL engine.
-    return (
-        (F.length(padded) - F.length(F.replace(padded, F.lit(needle), F.lit(""))))
-        / F.lit(len(needle))
-    ).cast("int")
+def word_count_marker(text: str, word: str) -> Column:
+    """Occurrences of ``word`` as a whitespace-delimited token in the
+    ``text`` column (SQL text). (len(s) - len(replace(s, needle, '')))
+    / len(needle) counts non-overlapping occurrences — portable to any
+    SQL engine. NULL ≡ empty: a NULL doc scores 0 for every language,
+    not NULL, so the detect_language argmax yields 'und' (NULL-text
+    fuzz finding: lang_detect once said 'de' for a NULL doc)."""
+    return F.expr(_word_count_marker_sql(text, word))
 
 
 def _lang_score_sql(t: str, words: list[str]) -> str:
-    # python sum() over the marker generators starts at int 0 — keep the
-    # same leading literal so the tree matches the Column-API form
     return "(" + " + ".join(["0"] + [_word_count_marker_sql(t, w) for w in words]) + ")"
 
 
-def language_scores(text: Column | str) -> dict[str, Column]:
+def language_scores(text: str) -> dict[str, Column]:
     """Marker-hit score per language (the n-gram heuristic)."""
-    if isinstance(text, str):
-        return {
-            lang: F.expr(_lang_score_sql(text, words))
-            for lang, words in LANG_MARKERS.items()
-        }
     return {
-        lang: sum(word_count_marker(text, w) for w in words)
+        lang: F.expr(_lang_score_sql(text, words))
         for lang, words in LANG_MARKERS.items()
     }
 
 
-def detect_language(text: Column | str) -> Column:
+def detect_language(text: str) -> Column:
     """argmax of language_scores; ties and zero-hits → 'und'.
 
-    Deterministic tiebreak: language name ascending among max scores.
+    Deterministic tiebreak: language name ascending among max scores —
+    the struct compare is score first, then priority (higher =
+    alphabetically earlier), same as an ordered SQL CASE chain.
     """
     langs = sorted(LANG_MARKERS)
-    if isinstance(text, str):
-        pairs = "array(" + ", ".join(
-            f"named_struct('score', {_lang_score_sql(text, LANG_MARKERS[lang])}, "
-            f"'pri', {len(langs) - 1 - i}, 'lang', {_sql_str(lang)})"
-            for i, lang in enumerate(langs)
-        ) + ")"
-        return F.expr(
-            f"CASE WHEN (array_max({pairs})).score <= 0 THEN 'und' "
-            f"ELSE (array_max({pairs})).lang END"
-        )
-    scores = language_scores(text)
-    # struct compare: score first, then priority (higher = alphabetically
-    # earlier) so ties resolve to the first language in sorted order —
-    # same as an ordered SQL CASE chain.
-    pairs = F.array(
-        *[
-            F.struct(
-                scores[lang].alias("score"),
-                F.lit(len(langs) - 1 - i).alias("pri"),
-                F.lit(lang).alias("lang"),
-            )
-            for i, lang in enumerate(langs)
-        ]
+    pairs = "array(" + ", ".join(
+        f"named_struct('score', {_lang_score_sql(text, LANG_MARKERS[lang])}, "
+        f"'pri', {len(langs) - 1 - i}, 'lang', {_sql_str(lang)})"
+        for i, lang in enumerate(langs)
+    ) + ")"
+    return F.expr(
+        f"CASE WHEN (array_max({pairs})).score <= 0 THEN 'und' "
+        f"ELSE (array_max({pairs})).lang END"
     )
-    best = F.array_max(pairs)
-    return F.when(best["score"] <= 0, F.lit("und")).otherwise(best["lang"])
 
 
 # Markup/whitespace normalization — the ingest-time text scrub every

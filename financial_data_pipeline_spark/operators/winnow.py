@@ -42,7 +42,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from financial_data_pipeline_spark.operators.dedup import capped_buckets, tokens
+from financial_data_pipeline_spark.operators.dedup import _bucket_pairs, tokens
 
 POS_BITS = 22
 POS_MASK = (1 << POS_BITS) - 1
@@ -160,27 +160,15 @@ def substring_overlap_pairs(
     nobody wants (``observation`` surfaces the drop count).
     """
     fps = winnow_fingerprints(df, text_col, id_col, k, window)
-    buckets = (
-        fps.select("id", "fp_hash")
-        .distinct()
-        .groupBy("fp_hash")
-        .agg(F.array_sort(F.collect_list("id")).alias("xs"))
-        .filter(F.size("xs") > 1)
-    )
-    buckets = capped_buckets(buckets, max_bucket_size, observation)
-    xs = F.col("xs")
-    pair_arr = F.flatten(
-        F.transform(
-            xs,
-            lambda x, i: F.transform(
-                F.slice(xs, i + 2, F.size(xs)),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
     return (
-        buckets.select(F.explode(pair_arr).alias("p"))
-        .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
+        _bucket_pairs(
+            fps.select("id", "fp_hash").distinct(),
+            ["fp_hash"],
+            F.col("id"),
+            max_bucket_size=max_bucket_size,
+            observation=observation,
+        )
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("shared_fps"))
         .filter(F.col("shared_fps") >= min_shared)
     )

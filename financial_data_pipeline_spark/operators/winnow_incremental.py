@@ -20,7 +20,7 @@ corpus size; append-only parquet, so the flow drops into a
 
 Hot postings (a boilerplate passage accumulating over months) are
 dropped from the PROBE when their historical posting list exceeds
-``max_bucket_size`` — the standing-cap twin of ``capped_buckets``; a
+``max_bucket_size`` — the standing-cap twin of ``dedup._bucket_pairs``; a
 fingerprint shared by thousands of accepted docs identifies
 boilerplate, not novel duplication, and its pair fan-out is the only
 O(corpus) term in the flow.

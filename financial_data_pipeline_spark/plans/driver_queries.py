@@ -1728,7 +1728,7 @@ def q_embedding_pairs_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     planes = _pair_block_planes(_table_rows(spark, sf_dir))  # corpus-derived schedule
-    emb = emb.withColumn("bucket", lsh_bucket(F.col("embedding"), planes))
+    emb = emb.withColumn("bucket", lsh_bucket("embedding", planes))
     return cosine_pairs(emb, threshold=0.45, block_col="bucket")
 
 
@@ -5655,7 +5655,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     blocked = emb.withColumn(
-        "block", lsh_bucket(F.col("embedding"), _pair_block_planes(_table_rows(spark, sf_dir)))
+        "block", lsh_bucket("embedding", _pair_block_planes(_table_rows(spark, sf_dir)))
     )
     return semantic_dedup(blocked, threshold=0.45, block_col="block").select(
         "vec_id"
@@ -14993,7 +14993,7 @@ def q_lof_outliers_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     emb = emb.withColumn(
-        "block", lsh_bucket(F.col("embedding"), _pair_block_planes(_table_rows(spark, sf_dir)))
+        "block", lsh_bucket("embedding", _pair_block_planes(_table_rows(spark, sf_dir)))
     )
     out = lof_scores(emb, k=5, block_col="block", block_dim=64)
     return out.select(
@@ -15040,7 +15040,7 @@ def q_pair_subdivision_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding").isNotNull()
             & (F.col("vec_id") < _PAIR_PROBE_ROWS)
         )
-        .withColumn("block", lsh_bucket(F.col("embedding"), _pair_block_planes()))
+        .withColumn("block", lsh_bucket("embedding", _pair_block_planes()))
     )
     pairs = _distance_pairs(
         emb, "embedding", "vec_id", "block", 20_000,
@@ -15093,7 +15093,7 @@ def q_silhouette_by_label_blocked(spark: SparkSession, sf_dir: str) -> DataFrame
 
     emb = load_table(spark, sf_dir, "embeddings")
     emb = emb.withColumn(
-        "block", lsh_bucket(F.col("embedding"), _pair_block_planes(_table_rows(spark, sf_dir)))
+        "block", lsh_bucket("embedding", _pair_block_planes(_table_rows(spark, sf_dir)))
     )
     out = silhouette_by_label(emb, block_col="block", block_dim=64)
     return out.select(
@@ -15139,7 +15139,7 @@ def q_knn_label_accuracy_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     emb = emb.withColumn(
-        "block", lsh_bucket(F.col("embedding"), _pair_block_planes(_table_rows(spark, sf_dir)))
+        "block", lsh_bucket("embedding", _pair_block_planes(_table_rows(spark, sf_dir)))
     )
     out = knn_label_accuracy(emb, k=5, block_col="block", block_dim=64)
     return out.select(

@@ -241,14 +241,16 @@ _FOOTER_EXACT_PREFIXES = ("int", "date", "timestamp", "bool", "uint", "time")
 def _footer_scalar(v):
     """Normalize a pyarrow footer statistic to the exact value the
     Spark stats job collects: tz-aware timestamps (isAdjustedToUTC
-    parquet columns) become naive UTC wall clock — the session runs in
-    UTC, so Spark's collected datetimes are naive UTC and the manifest
-    ISO strings must match byte-for-byte or string-order range pruning
-    at equal boundaries would mis-prune."""
+    parquet columns) become naive wall clock in the DRIVER's local
+    zone — ``collect()`` converts TimestampType with
+    ``datetime.fromtimestamp``, i.e. the Python process's TZ, not the
+    session zone — and the manifest ISO strings must match
+    byte-for-byte or string-order range pruning at equal boundaries
+    would mis-prune."""
     import datetime
 
     if isinstance(v, datetime.datetime) and v.tzinfo is not None:
-        return v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+        return v.astimezone().replace(tzinfo=None)
     return v
 
 

@@ -83,6 +83,20 @@ def test_load_table_memo_is_metadata_only(spark):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_clear_table_memo_clears_lake_file_schema_memo(spark, tmp_path):
+    # one reset entry point for every schema memo a harness can hit:
+    # the lake's per-file memo must not outlive clear_table_memo()
+    from financial_data_pipeline_spark.sources import adapters, laketable
+
+    f = str(tmp_path / "x.parquet")
+    shutil.copy(f"{SF}/nation.parquet", f)
+    laketable._memo_put([f], load_table(spark, SF, "nation").schema)
+    assert laketable._memo_schema([f]) is not None
+    adapters.clear_table_memo()
+    assert laketable._memo_schema([f]) is None
+    assert not adapters._SCHEMA_MEMO and len(adapters._TABLE_MEMO) == 0
+
+
 @pytest.fixture(scope="module")
 def spark():
     from financial_data_pipeline_spark import get_spark

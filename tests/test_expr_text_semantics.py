@@ -58,8 +58,6 @@ def test_dot_norm_cosine_text_equals_api(spark):
         (similarity.dot(a_txt, b_txt), _dot_api(a_api, b_api)),
         (similarity.norm(a_txt), _norm_api(a_api)),
         (similarity.cosine(a_txt, b_txt), _cosine_api(a_api, b_api)),
-        # Column args must keep taking the API path unchanged
-        (similarity.cosine(a_api, b_api), _cosine_api(a_api, b_api)),
     ]:
         assert df.select(new.alias("x")).sameSemantics(
             df.select(old.alias("x"))

@@ -5,6 +5,9 @@ manifests to the Spark aggregation it replaces (range pruning compares
 the stored ISO strings, so even a formatting drift mis-prunes)."""
 
 import datetime
+import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -62,10 +65,35 @@ def test_footer_stats_match_spark_job(spark, tmp_path):
     for fs in slow:
         fs.stats.pop("__bloom_k", None)
     assert _canon(fast) == _canon(slow)
-    # the timestamp strings must be NAIVE-UTC ISO (string-order pruning
-    # at equal boundaries depends on the exact format)
-    ts_min = dict(fast[0].stats)["ts"][0]
-    assert "+" not in ts_min and ts_min.startswith("2024-")
+    # the timestamp strings must be NAIVE ISO in the driver's local zone,
+    # as collect() renders them (string-order pruning at equal
+    # boundaries depends on the exact format)
+    ts_min = min(fs.stats["ts"][0] for fs in fast)
+    assert ts_min == datetime.datetime.fromtimestamp(1704067200).isoformat()
+
+
+def test_footer_stats_match_spark_job_on_non_utc_driver():
+    """``collect()`` renders timestamps in the driver process's local
+    zone, so the footer path must too: rerun the comparison above in a
+    fresh interpreter whose TZ is not UTC."""
+    env = dict(os.environ, TZ="America/New_York")
+    r = subprocess.run(
+        [
+            sys.executable,
+            "-m",
+            "pytest",
+            "-q",
+            "-p",
+            "no:cacheprovider",
+            f"{__file__}::test_footer_stats_match_spark_job",
+        ],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert r.returncode == 0, r.stdout[-4000:] + r.stderr[-2000:]
 
 
 def test_footer_stats_fall_back_on_strings_and_doubles(spark, tmp_path):
@@ -126,6 +154,9 @@ def test_footer_scalar_normalizes_tz():
     aware = datetime.datetime(
         2024, 1, 1, 12, 0, 0, tzinfo=datetime.timezone.utc
     )
-    assert _footer_scalar(aware) == datetime.datetime(2024, 1, 1, 12, 0, 0)
+    # driver-local naive wall clock, exactly what collect() returns
+    assert _footer_scalar(aware) == datetime.datetime.fromtimestamp(
+        aware.timestamp()
+    )
     naive = datetime.datetime(2024, 1, 1, 12, 0, 0)
     assert _footer_scalar(naive) is naive

@@ -115,6 +115,27 @@ def test_simhash_near_dups_have_small_hamming(spark):
     assert ham(fp[1], fp[2]) < ham(fp[1], fp[3])
 
 
+def test_simhash_pairs_uncapped_past_default_bucket_cap(spark):
+    """SimHash chunk blocking is lossless (pigeonhole), so unlike the
+    capped pair operators it keeps EVERY pair of a chunk bucket holding
+    more docs than their default cap (1000)."""
+    n = 1001
+    df = spark.range(n).select(
+        F.col("id").alias("doc_id"),
+        F.lit("one boilerplate sentence repeated verbatim").alias("text"),
+    )
+    got = (
+        dedup.simhash_pairs(df)
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.max("hamming").alias("max_ham"),
+            F.sum((F.col("id_a") >= F.col("id_b")).cast("int")).alias("bad"),
+        )
+        .first()
+    )
+    assert (got.n, got.max_ham, got.bad) == (n * (n - 1) // 2, 0, 0)
+
+
 def test_simhash_kernel_matches_sql_fold(spark, docs):
     """The Arrow numpy kernel must be bit-identical to the pure-SQL
     higher-order-aggregate specification (same token hash, same ±1
@@ -149,12 +170,12 @@ def test_lsh_ann_self_first_and_bucket_restricted(spark, emb):
     qb = {
         r.vec_id
         for r in emb.select(
-            "vec_id", similarity.lsh_bucket(F.col("embedding"), planes).alias("b")
+            "vec_id", similarity.lsh_bucket("embedding", planes).alias("b")
         )
         .filter(
             F.col("b")
             == emb.select(
-                similarity.lsh_bucket(F.col("embedding"), planes)
+                similarity.lsh_bucket("embedding", planes)
             ).filter("vec_id = 0").first()[0]
         )
         .collect()
@@ -180,7 +201,7 @@ def test_cosine_pairs_blocked_matches_exact_within_blocks(spark, emb):
     pairs, identical rounded similarities."""
     planes = similarity.seeded_planes(4, 64, seed=7)
     bucketed = emb.withColumn(
-        "bucket", similarity.lsh_bucket(F.col("embedding"), planes)
+        "bucket", similarity.lsh_bucket("embedding", planes)
     )
     blocked = {
         (r.id_a, r.id_b, r.cos_sim)
@@ -239,7 +260,7 @@ def test_cosine_matches_numpy(spark, emb):
         spark.createDataFrame(
             [(rows[0]["embedding"], rows[1]["embedding"])], ["a", "b"]
         )
-        .select(similarity.cosine(F.col("a"), F.col("b")).alias("c"))
+        .select(similarity.cosine("a", "b").alias("c"))
         .first()["c"]
     )
     assert abs(got - want) < 1e-9
@@ -338,7 +359,7 @@ def test_detect_language_markers(spark):
     out = {
         r.doc_id: r.lang
         for r in df.select(
-            "doc_id", text.detect_language(F.col("text")).alias("lang")
+            "doc_id", text.detect_language("text").alias("lang")
         ).collect()
     }
     assert out == {1: "en", 2: "es", 3: "und"}
@@ -679,7 +700,7 @@ def test_exact_dedup_keep_n_caps_copies(spark):
     kept1 = {
         r.doc_id for r in dedup.exact_dedup_keep_n(df, keep_n=1).collect()
     }
-    assert kept1 == {0, 10}  # keep_n=1 == exact_dedup_filter
+    assert kept1 == {0, 10}  # keep_n=1: the lowest id per content hash
 
 
 # ---------------------------------------------------------------------------

@@ -9,11 +9,13 @@ dedup determinism, salted-join equivalence.
 import numpy as np
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
+# derandomize: a red run re-fails on the next run with the same draws
 SETTINGS = dict(
     max_examples=5,
+    derandomize=True,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
@@ -707,6 +709,10 @@ def test_aqe_splits_planted_skew_join(spark):
         max_size=40,
     ),
 )
+# a new value far outside a (sub)normal-width reference range: its
+# unclamped bin index is past 2^31, where an int cast wraps
+@example(ref_vals=[-1.401298464324817e-45, 0.0], new_vals=[20000.0])
+@example(ref_vals=[0.0, 1.1754943508222875e-38], new_vals=[0.0, 1.0])
 def test_hist_compact_psi_matches_bruteforce(spark, ref_vals, new_vals):
     """The compact drift histogram (map of occupied bins + sequence
     fold) must agree with a brute-force Python replay of the PSI

@@ -128,7 +128,7 @@ def _adaptive_blocked_probes(k: int):
         def build(spark, sf_dir, n_planes):
             emb = load_table(spark, sf_dir, "embeddings").withColumn(
                 "block",
-                lsh_bucket(F.col("embedding"), seeded_planes(n_planes, 64, seed=7)),
+                lsh_bucket("embedding", seeded_planes(n_planes, 64, seed=7)),
             )
             return op(emb)
 

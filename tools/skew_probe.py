@@ -250,8 +250,8 @@ def amplify_skew_documents(spark, k: int, out_dir: str, hot_frac: float) -> None
 
 def dedup_probe(k: int, hot_frac: float) -> int:
     """Verdict-r5 item 5: measure the minhash/jaccard family on a hot
-    boilerplate corpus, with the shipped ``capped_buckets`` guard
-    (dedup.py) as the mitigation — registered defaults
+    boilerplate corpus, with the shipped hot-bucket cap (``_bucket_pairs``,
+    dedup.py) as the mitigation — registered defaults
     (max_bucket_size=1000) vs an explicitly uncapped run at a size
     where the quadratic is still feasible to time. Appends a
     ``## Text-dedup hot corpus`` section to SKEW.md."""
@@ -380,7 +380,7 @@ def dedup_probe(k: int, hot_frac: float) -> int:
         "boilerplate (shared ~40-token template + one unique trailing "
         "token, so exact dedup cannot remove the family and every hot "
         "doc lands in the same LSH band / shingle buckets). The shipped "
-        "mitigation is `capped_buckets` (operators/dedup.py): buckets "
+        "mitigation is the hot-bucket cap of `_bucket_pairs` (operators/dedup.py): buckets "
         "over `max_bucket_size` (default 1000, what the registered "
         "queries run) are dropped before pair expansion, with "
         "`Observation` telemetry instead of silent truncation.",
